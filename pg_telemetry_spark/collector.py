@@ -8,8 +8,8 @@ Streaming job plus a warehouse layout:
     stat snapshots / event files land in ``landing_dir``
       -> readStream (explicit schema, incremental file discovery)
       -> normalize (types, UTC, derived event_date)
-      -> writeStream.foreachBatch(sink.write_batch)   # exactly-once
-           + incremental hourly rollup                 # MV analog
+      -> run_available_now: foreachBatch(sink.write_batch)  # exactly-once
+           + incremental hourly rollup                       # MV analog
       -> warehouse serves SURVEY §2's query surface
          (partition-pruned slices, deltas/rates, last-point, ...)
 
@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from pg_telemetry_spark.session import prepare_session
 from pg_telemetry_spark.sinks import ParquetWarehouseSink
+from pg_telemetry_spark.streaming import run_available_now
 
 #: Wire schema of collected telemetry rows (stat snapshots or events).
 COLLECT_SCHEMA = T.StructType(
@@ -87,13 +88,7 @@ class TelemetryCollector:
         analog; a production deployment uses a processingTime trigger
         instead — same code)."""
         stream = self.spark.readStream.schema(COLLECT_SCHEMA).parquet(self.landing_dir)
-        q = (
-            stream.writeStream.foreachBatch(self._ship)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, self._ship, self.checkpoint_dir)
 
     # -- query surface over the warehouse --------------------------------
 
@@ -321,13 +316,7 @@ class StatViewCollector:
         stream = self.spark.readStream.schema(self.schema).parquet(
             self.landing_dir
         )
-        q = (
-            stream.writeStream.foreachBatch(self._ship)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, self._ship, self.checkpoint_dir)
 
     # -- query surface ------------------------------------------------
 

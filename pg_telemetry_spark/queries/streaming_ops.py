@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pg_telemetry_spark.registry import query
+from pg_telemetry_spark.streaming import run_available_now
 from pg_telemetry_spark.streaming.harness import FileStreamHarness
 from pg_telemetry_spark.tables import load_table
 
@@ -344,15 +345,9 @@ def snk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = FileStreamHarness(spark, STREAM_SCHEMA)
     for b in (day1, day2):
         h.add_batch(b)
-        with h.sized_shuffle():
-            q = (
-                h.stream()
-                .writeStream.foreachBatch(write_warehouse)
-                .option("checkpointLocation", h.checkpoint("sink"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_available_now(
+            h.stream(), write_warehouse, h.checkpoint("sink"), confs=h.confs
+        )
     back = spark.read.schema(STREAM_SCHEMA).parquet(f"{sink_dir}/batch_id=*")
     return back.groupBy("event_type").agg(F.count("*").alias("n_events"))
 

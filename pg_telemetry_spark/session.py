@@ -2,8 +2,9 @@
 
 Two entry points:
 
-- :func:`get_session` — build a local session with the engine's
-  required configuration (tests, bench).
+- :func:`get_session` — build a local session (tests, bench) and
+  hand it to :func:`prepare_session`, so it carries exactly the confs
+  a driver-owned session gets.
 - :func:`prepare_session` — apply the runtime-settable required confs
   to an EXISTING session (the driver owns the session for the
   ``__spark_entry__`` contract; these confs are all ``spark.sql.*``
@@ -51,15 +52,15 @@ RUNTIME_CONFS: dict[str, str] = {
     # loop widths are sized structurally instead (loop_sizing).
 }
 
-#: Engine join/shuffle sizing for HOST sessions (the driver's plain
-#: session otherwise runs Spark defaults): 32 MB broadcast threshold
-#: keeps every fixture dim (and any real dim table of that order) on
-#: the broadcast side — the plans audited in PLANS.md assume it — and
-#: 200 default shuffle partitions launch near-empty tasks per shuffle
-#: at fixture scale.  Applied ONLY while the session still carries the
-#: Spark built-in default, so a deliberate site config (or a
-#: ``sized_shuffle`` cap in effect when ``prepare_session`` re-runs
-#: mid-operator) is never stomped.  At cluster scale the initial
+#: Engine join/shuffle sizing for every session prepare_session sees,
+#: get_session's included (all otherwise run Spark defaults): a 32 MB
+#: broadcast threshold keeps every fixture dim (and any real dim table
+#: of that order) on the broadcast side — the plans audited in
+#: PLANS.md assume it — and 200 default shuffle partitions launch
+#: near-empty tasks per shuffle at fixture scale.  Applied ONLY while
+#: the session still carries the Spark built-in default, so a
+#: deliberate site config (or a ``scoped_conf`` cap in effect when
+#: ``prepare_session`` re-runs mid-operator) is never stomped.  At cluster scale the initial
 #: partition count is sized to the cluster and AQE coalesces down.
 SIZING_CONFS: dict[str, tuple[str, str]] = {
     # key: (spark built-in default, engine value)
@@ -271,6 +272,23 @@ def respread_if_narrow(df, width: int | None = None):
 
 
 @contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the block; on exit, also on an exception, put
+    each key back to its earlier value, or unset it if it was unset
+    (``get(key, None)`` is None then, even for a conf with a default)."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def sized_shuffle(
     spark: SparkSession, partitions: int = 16, adaptive: bool | None = None
 ):
@@ -298,19 +316,10 @@ def sized_shuffle(
     identical ranks.  Default ``None`` leaves the session setting
     untouched."""
     key = "spark.sql.shuffle.partitions"
-    akey = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    old_adaptive = spark.conf.get(akey) if adaptive is not None else None
-    try:
-        if int(old) > partitions:
-            spark.conf.set(key, str(partitions))
-        if adaptive is not None:
-            spark.conf.set(akey, str(adaptive).lower())
-        yield
-    finally:
-        spark.conf.set(key, old)
-        if old_adaptive is not None:
-            spark.conf.set(akey, old_adaptive)
+    confs = {key: str(partitions)} if int(spark.conf.get(key)) > partitions else {}
+    if adaptive is not None:
+        confs["spark.sql.adaptive.enabled"] = str(adaptive).lower()
+    return scoped_conf(spark, confs)
 
 
 #: app id -> LAST-APPLIED checkpoint dir.  A dict (not a set of
@@ -381,10 +390,10 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
     """Build (or fetch) a local session configured for the engine.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all).
-    Shuffle partitions are sized for the local fixture scale; at
-    cluster scale this is AQE-governed (initialPartitionNum high,
-    coalesce down), so the literal number here is not a scale
-    assumption.
+    The builder sets only what must be fixed at JVM start (master,
+    app name, memory, UI off); every SQL conf, including the shuffle
+    width sized for the local fixture scale, comes from
+    :func:`prepare_session`, exactly as on a driver-owned session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # SPARK_GRAFT_MASTER overrides the local master entirely (e.g.
@@ -395,7 +404,6 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", "32")
         # 16g default (round 9): the single-JVM local harness now runs
         # 135-query legs up to sf10 in one session; 8g survived 67
         # queries (r8) but OOMed ~120 queries into the r9 sf10 leg.
@@ -403,7 +411,6 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
         # assumption — the box has 128 GiB.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
     if not master.startswith("local["):
         # separate executor processes: size their heaps explicitly
@@ -413,8 +420,6 @@ def get_session(app_name: str = "pg_telemetry_spark") -> SparkSession:
             "spark.executor.memory",
             os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "3g"),
         )
-    for key, value in RUNTIME_CONFS.items():
-        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return prepare_session(spark)

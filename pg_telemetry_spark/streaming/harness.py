@@ -2,10 +2,10 @@
 
 Drives a file-stream source the way the reference's collector drives
 its ingest loop: Parquet files land in a directory one batch at a
-time; each ``run_available`` call starts the stream with
-``Trigger.AvailableNow`` against the SAME checkpoint, so only
-newly-landed files are processed — exactly the restart-and-catch-up
-semantics of a production collector, compressed into a test.
+time; each ``run_available`` call runs the stream under
+``Trigger.AvailableNow`` (the collectors' ``run_available_now``) on the
+SAME checkpoint, so only newly-landed files are processed — exactly
+the restart-and-catch-up semantics of a production collector.
 
 Output is captured through ``foreachBatch`` (driver-side in local
 mode), which is also the engine's warehouse-sink seam: in production
@@ -15,7 +15,6 @@ the capture function is replaced by ``batch_df.write.format("jdbc")``
 
 from __future__ import annotations
 
-import contextlib
 import os
 import tempfile
 from dataclasses import dataclass, field
@@ -24,6 +23,19 @@ from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from pg_telemetry_spark.streaming import run_available_now
+
+
+def _stream_shuffle_width() -> int:
+    """``PG_TELEMETRY_SPARK_STREAM_SHUFFLE`` (default 4), parsed per
+    harness so a width sweep can change it between runs."""
+    raw = os.environ.get("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "4")
+    if not raw.strip().isdecimal() or int(raw) < 1:
+        raise ValueError(
+            f"PG_TELEMETRY_SPARK_STREAM_SHUFFLE must be an integer >= 1, got {raw!r}"
+        )
+    return int(raw)
 
 
 @dataclass
@@ -49,57 +61,34 @@ class FileStreamHarness:
     #: was mixed (only the stream-stream join kept improving) and
     #: halves state parallelism for no suite-level gain.  Results are
     #: partition-count-independent (batch equivalence tests pin them).
-    shuffle_partitions: int = field(
-        default_factory=lambda: int(
-            os.environ.get("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "4")
-        )
-    )
+    shuffle_partitions: int = field(default_factory=_stream_shuffle_width)
     #: State-store backend.  RocksDB (bundled rocksdbjni) is the scale
     #: story for stateful streaming — the default HDFS-backed provider
     #: holds every key in executor heap, so 100 TB of keyed state OOMs,
     #: while RocksDB spills state to local SSD with bounded memory
     #: (SURVEY §3 EP3).  Results are provider-independent (the batch
-    #: equivalence tests pin them); set to "" to fall back to the
-    #: session default provider.
-    state_store_provider: str = (
+    #: equivalence tests pin them).
+    state_store_provider: ClassVar[str] = (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     _batch_no: int = 0
 
     #: Class-level progress capture: every ``run_available`` appends
-    #: one summary dict per completed run ({query name, batch
-    #: durations, state rows/bytes totals from the last progress}).
+    #: one summary dict per completed run ({query name, per-batch
+    #: durations and state rows/bytes}) from its ``recentProgress``.
     #: tools/measure_streaming_scale.py drains this to report
     #: state-store size + batch latency per operator at a given SF —
     #: a list on the CLASS (ClassVar) so query functions need no API
     #: change and dataclass treats it as shared state, not a field.
     progress_log: ClassVar[list] = []
 
-    @contextlib.contextmanager
-    def sized_shuffle(self):
-        """Temporarily size shuffle/state partitioning (and select the
-        state-store provider) for a local micro-batch run; always
-        restores the host session's values."""
-        keys = {"spark.sql.shuffle.partitions": str(self.shuffle_partitions)}
-        if self.state_store_provider:
-            keys["spark.sql.streaming.stateStore.providerClass"] = (
-                self.state_store_provider
-            )
-        old: dict[str, str | None] = {}
-        for k, v in keys.items():
-            try:
-                old[k] = self.spark.conf.get(k)
-            except Exception:
-                old[k] = None
-            self.spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    self.spark.conf.unset(k)
-                else:
-                    self.spark.conf.set(k, v)
+    @property
+    def confs(self) -> dict[str, str]:
+        """Confs scoped around each run: state-store width and provider."""
+        return {
+            "spark.sql.shuffle.partitions": str(self.shuffle_partitions),
+            "spark.sql.streaming.stateStore.providerClass": self.state_store_provider,
+        }
 
     @property
     def landing(self) -> str:
@@ -130,24 +119,12 @@ class FileStreamHarness:
         def capture(batch_df: DataFrame, batch_id: int) -> None:
             captured.append(batch_df.collect())
 
-        with self.sized_shuffle():
-            q = (
-                transformed.writeStream.foreachBatch(capture)
-                .outputMode(output_mode)
-                .option("checkpointLocation", self.checkpoint(name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            self._log_progress(name, q)
+        self._log_progress(name, run_available_now(
+            transformed, capture, self.checkpoint(name), output_mode, self.confs))
         return captured
 
-    def _log_progress(self, name: str, q) -> None:
+    def _log_progress(self, name: str, progresses: list[dict]) -> None:
         """Summarize the finished run's progress into progress_log."""
-        try:
-            progresses = [p for p in q.recentProgress if p]
-        except Exception:
-            return
         batches = [
             {
                 "batch_id": p.get("batchId"),

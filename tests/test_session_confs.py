@@ -3,12 +3,20 @@
 Required confs are always (re)applied; SIZING confs are defaults-only
 — prepare_session runs inside every load_table call, so if it stomped
 a non-default value it would break sized_shuffle's temporary cap
-mid-operator and override deliberate site configs.
+mid-operator and override deliberate site configs.  Temporary conf
+changes all go through scoped_conf, which restores on every exit path.
 """
 
 from __future__ import annotations
 
-from pg_telemetry_spark.session import SIZING_CONFS, prepare_session, sized_shuffle
+import pytest
+
+from pg_telemetry_spark.session import (
+    SIZING_CONFS,
+    prepare_session,
+    scoped_conf,
+    sized_shuffle,
+)
 
 _SHUF = "spark.sql.shuffle.partitions"
 
@@ -44,6 +52,47 @@ def test_sized_shuffle_cap_survives_prepare_session(spark):
         prepare_session(spark)  # load_table inside an operator loop
         assert spark.conf.get(_SHUF) == "4"
     assert spark.conf.get(_SHUF) != "4"
+
+
+def test_scoped_conf_restores_after_exception(spark):
+    old = spark.conf.get(_SHUF)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {_SHUF: "3"}):
+            assert spark.conf.get(_SHUF) == "3"
+            raise RuntimeError("boom")
+    assert spark.conf.get(_SHUF) == old
+
+
+def test_scoped_conf_nested_scopes_restore_in_order(spark):
+    old = spark.conf.get(_SHUF)
+    with scoped_conf(spark, {_SHUF: "5"}):
+        with scoped_conf(spark, {_SHUF: "3"}):
+            assert spark.conf.get(_SHUF) == "3"
+        assert spark.conf.get(_SHUF) == "5"
+    assert spark.conf.get(_SHUF) == old
+
+
+def test_scoped_conf_leaves_unset_key_unset(spark):
+    """A key with a built-in default that was never set must come back
+    unset, not pinned to the default's value."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    spark.conf.unset(key)
+    default = spark.conf.get(key)
+    with scoped_conf(spark, {key: "com.example.Provider"}):
+        assert spark.conf.get(key) == "com.example.Provider"
+    assert spark.conf.get(key, None) is None
+    assert spark.conf.get(key) == default
+
+
+def test_sized_shuffle_only_lowers_the_width(spark):
+    old = spark.conf.get(_SHUF)
+    with sized_shuffle(spark, int(old) + 10):
+        assert spark.conf.get(_SHUF) == old
+    with sized_shuffle(spark, 2, adaptive=False):
+        assert spark.conf.get(_SHUF) == "2"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.conf.get(_SHUF) == old
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_reliable_checkpoint_dir_engages(spark, tmp_path):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 
 from pg_telemetry_spark.queries.streaming_ops import (
     STREAM_SCHEMA,
@@ -304,6 +305,68 @@ def test_rocksdb_state_store_engages(spark):
     assert not any(f.endswith(".delta") for f in files), (
         "HDFS-provider .delta files present — RocksDB conf did not engage"
     )
+
+
+def test_harness_run_restores_session_confs(spark):
+    """A harness run scopes its state-store width and provider to the
+    run: the session reads its earlier values afterwards."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.stateStore.providerClass")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    h = FileStreamHarness(spark, STREAM_SCHEMA)
+    assert str(h.shuffle_partitions) != before[keys[0]]
+    h.add_batch(_mk_events(spark, [(1, 0, 1, "click", 1.0)]))
+    agg = h.stream().groupBy("user_id").agg(F.count("*").alias("n"))
+    h.run_available(agg, "confs", output_mode="update")
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
+def test_progress_log_one_entry_per_harness_run_none_per_collector(spark, tmp_path):
+    from pg_telemetry_spark.collector import COLLECT_SCHEMA, TelemetryCollector
+
+    log = FileStreamHarness.progress_log
+    h = FileStreamHarness(spark, STREAM_SCHEMA)
+    for i, m in enumerate((0, 5)):
+        h.add_batch(_mk_events(spark, [(i, m, 1, "click", 1.0), (10 + i, m, 2, "view", 1.0)]))
+        mark = len(log)
+        h.run_available(h.stream(), "plog", output_mode="append")
+        assert len(log) == mark + 1
+        entry = log[-1]
+        assert entry["name"] == "plog" and entry["provider"] == h.state_store_provider
+        assert entry["batches"] and sum(b["input_rows"] for b in entry["batches"]) == 2
+        assert set(entry["batches"][0]) == {
+            "batch_id", "duration_ms", "input_rows", "state_rows", "state_bytes"
+        }
+
+    c = TelemetryCollector(
+        spark,
+        landing_dir=str(tmp_path / "landing"),
+        warehouse_dir=str(tmp_path / "wh"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    _mk_events(spark, [(1, 0, 1, "click", 1.0)]).select(
+        *COLLECT_SCHEMA.fieldNames()
+    ).write.parquet(c.landing_dir)
+    mark = len(log)
+    c.run_available()
+    assert c.raw().count() == 1
+    assert len(log) == mark
+
+
+@pytest.mark.parametrize("raw", ["0", "-2", "four", "2.5", ""])
+def test_stream_shuffle_env_rejects_bad_values(spark, monkeypatch, raw):
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", raw)
+    with pytest.raises(ValueError, match="PG_TELEMETRY_SPARK_STREAM_SHUFFLE") as e:
+        FileStreamHarness(spark, STREAM_SCHEMA)
+    assert repr(raw) in str(e.value)
+
+
+def test_stream_shuffle_env_read_per_harness(spark, monkeypatch):
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "3")
+    assert FileStreamHarness(spark, STREAM_SCHEMA).shuffle_partitions == 3
+    monkeypatch.setenv("PG_TELEMETRY_SPARK_STREAM_SHUFFLE", "7")
+    assert FileStreamHarness(spark, STREAM_SCHEMA).shuffle_partitions == 7
+    monkeypatch.delenv("PG_TELEMETRY_SPARK_STREAM_SHUFFLE")
+    assert FileStreamHarness(spark, STREAM_SCHEMA).shuffle_partitions == 4
 
 
 def test_topk_windowed_final_state_matches_batch_topk(spark, sf_dir):
